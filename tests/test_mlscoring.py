@@ -185,3 +185,41 @@ def test_grail_span_guard_refuses_embed(spark, tmp_path):
         mlscoring._grail_seg_coeffs(spark, dst).collect()
     mlscoring._GRAIL_SEG_DICT_CACHE.pop(dst, None)
     shutil.rmtree(dst, ignore_errors=True)
+
+
+def test_grail_refuses_too_few_landmarks(spark, tmp_path):
+    """Fewer than EMBED_DIM landmark segments cannot fill the four
+    degraded-feature slots: the Spark tier and the oracle factory both
+    raise the same ValueError naming the landmark count, not a
+    misleading EMBED_DIM error or a bare IndexError."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = mlscoring.SEG_ROWS
+    rows = [(u, n) for u in (0, 1)] + [(u, n // 2) for u in (2, 3, 4)]
+    uid = np.concatenate([np.full(k, u, dtype=np.int64) for u, k in rows])
+    sf = tmp_path / "two_landmarks"
+    sf.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": np.arange(len(uid), dtype=np.int64),
+                "ts": pd.date_range(
+                    "2024-01-01", periods=len(uid), freq="min"
+                ).astype("datetime64[us]"),
+                "user_id": uid,
+                "value": np.round(np.sin(np.arange(len(uid))) * 10.0, 2),
+            }
+        ),
+        str(sf / "events.parquet"),
+    )
+    match = "2 landmark segments, fewer than EMBED_DIM=4"
+    try:
+        with pytest.raises(ValueError, match=match):
+            mlscoring._grail_seg_coeffs(spark, str(sf))
+        with pytest.raises(ValueError, match=match):
+            mlscoring._make_grail_oracle("kmeans")(str(sf))
+    finally:
+        mlscoring._GRAIL_SEG_DICT_CACHE.pop(str(sf), None)

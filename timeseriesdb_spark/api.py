@@ -359,7 +359,7 @@ class SignalEngine:
         batch-built rollup and the streaming maintainer's per-batch
         partials: merge is associative, so partial granularity is
         irrelevant."""
-        r = self.spark.read.parquet(rollup_path)
+        r = store.read_parquet(self.spark, rollup_path)
         merged = {
             "count": F.sum("cnt").alias("count"),
             "min": F.min("min_value").alias("min"),
@@ -399,7 +399,7 @@ class SignalEngine:
             return (dt.timestamp() % sec) == 0
 
         if _aligned(t0) and _aligned(t1):
-            r = self.spark.read.parquet(rollup_path)
+            r = store.read_parquet(self.spark, rollup_path)
             if t0 is not None:
                 r = r.filter(F.col("bucket_start") >= F.lit(t0))
             if t1 is not None:
@@ -502,7 +502,7 @@ class SignalEngine:
         from timeseriesdb_spark.tables import load_table
 
         daily = (
-            self.spark.read.parquet(store_path)
+            store.read_parquet(self.spark, store_path)
             .groupBy("ship_d")
             .agg(
                 F.sum("d_cnt").alias("d_cnt"),
@@ -662,7 +662,7 @@ class SignalEngine:
             # carries from PRIOR runs only (batch_id < base) — this
             # run's own writes must not inflate the seed on resume
             hw = signal_high_water(
-                self.spark.read.parquet(feature_path).where(
+                store.read_parquet(self.spark, feature_path).where(
                     F.col("batch_id") < base
                 )
             )
@@ -736,7 +736,7 @@ class SignalEngine:
                 "run maintain_drift_feature_stream first (the store is "
                 "populated per micro-batch)"
             )
-        partials = self.spark.read.parquet(feature_path)
+        partials = store.read_parquet(self.spark, feature_path)
         feats = _features_from_chunks(merge_feature_partials(partials))
         return _drift_rollup(
             self.spark, sf_dir, feats,
@@ -752,7 +752,7 @@ class SignalEngine:
         bounds (inclusive) prune TIER partials, never raw facts —
         the rollup's whole point: any time-range distinct question
         answers from bytes-per-signal-day state."""
-        tier = self.spark.read.parquet(sketch_path)
+        tier = store.read_parquet(self.spark, sketch_path)
         if start_day is not None:
             tier = tier.where(F.col("event_date") >= F.lit(start_day))
         if end_day is not None:
@@ -870,7 +870,7 @@ class SignalEngine:
         """Merged OHLC bars from maintained partials."""
         from timeseriesdb_spark.operators.tsanalytics import merge_ohlc
 
-        return merge_ohlc(self.spark.read.parquet(bars_path))
+        return merge_ohlc(store.read_parquet(self.spark, bars_path))
 
     # partial-kind → merge that PRESERVES the partial schema, so a
     # compacted store answers queries identically and stays mergeable
@@ -941,7 +941,7 @@ class SignalEngine:
     def histogram_bins(self, hist_path: str) -> DataFrame:
         """Merged per-signal histogram from maintained partials."""
         return (
-            self.spark.read.parquet(hist_path)
+            store.read_parquet(self.spark, hist_path)
             .groupBy("user_id", "bin")
             .agg(F.sum("partial_n").alias("n"))
         )
@@ -988,7 +988,7 @@ class SignalEngine:
         )
 
         merged = (
-            self.spark.read.parquet(qsk_path)
+            store.read_parquet(self.spark, qsk_path)
             .groupBy("user_id", "bucket")
             .agg(F.sum("partial_n").alias("n"))
         )
@@ -1041,7 +1041,7 @@ class SignalEngine:
         )
 
         per_user = (
-            self.spark.read.parquet(tier_path)
+            store.read_parquet(self.spark, tier_path)
             .groupBy("e1", "e2", "e3", "user_id")
             .agg(F.sum("n").alias("n"))
         )
@@ -1100,7 +1100,7 @@ class SignalEngine:
             hh_from_day_counts,
         )
 
-        tier = self.spark.read.parquet(hh_path)
+        tier = store.read_parquet(self.spark, hh_path)
         if start_day is not None:
             tier = tier.where(F.col("day") >= F.lit(start_day))
         if end_day is not None:
@@ -1309,7 +1309,7 @@ class SignalEngine:
             _json.dump(snapshot, f)
         # Read exactly the snapshotted partitions (no partition
         # inference on direct paths — batch_id simply isn't a column).
-        df = self.spark.read.parquet(*[f"{base}/{d}" for d in snapshot])
+        df = store.read_parquet(self.spark, *[f"{base}/{d}" for d in snapshot])
         drop = [c for c in ("batch_id",) if c in df.columns]
         merged = self._PARTIAL_MERGES[kind](df.drop(*drop) if drop else df)
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -1327,7 +1327,7 @@ class SignalEngine:
         )
 
         merged = (
-            self.spark.read.parquet(sketch_path)
+            store.read_parquet(self.spark, sketch_path)
             .groupBy("user_id", "depth", "bucket")
             .agg(F.sum("partial_n").alias("n"))
         )
@@ -1335,7 +1335,7 @@ class SignalEngine:
 
     def distinct_estimate(self, sketch_path: str) -> DataFrame:
         """Per-signal distinct estimate from maintained sketches."""
-        r = self.spark.read.parquet(sketch_path)
+        r = store.read_parquet(self.spark, sketch_path)
         return r.groupBy("user_id").agg(
             F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias(
                 "approx_distinct"
@@ -1528,7 +1528,7 @@ class CorpusEngine:
         )
 
     def docs(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return store.read_parquet(self.spark, self.path)
 
     def split(self, name: str) -> DataFrame:
         """One split; the predicate is a partition filter (pruned scan)."""
@@ -1624,7 +1624,7 @@ class CorpusEngine:
         )
 
         merged = (
-            self.spark.read.parquet(tier_path)
+            store.read_parquet(self.spark, tier_path)
             .groupBy("source", "term")
             .agg(F.sum("cnt").alias("cnt"))
         )

@@ -741,7 +741,10 @@ def _seg_dict_from_pdf(pdf: "pd.DataFrame") -> list:
     """Shared numpy body so the Spark pull and the DuckDB oracle read
     derive byte-identical dictionaries. Signals shorter than one
     segment contribute nothing (they have no complete segment to
-    embed either)."""
+    embed either). Fewer than EMBED_DIM landmarks cannot fill the
+    EMBED_DIM degraded-feature slots, so both paths refuse here."""
+    from timeseriesdb_spark.operators.mlkernels import EMBED_DIM
+
     out = []
     for _, g in pdf.sort_values(["user_id", "rn"]).groupby(
         "user_id", sort=True
@@ -753,6 +756,13 @@ def _seg_dict_from_pdf(pdf: "pd.DataFrame") -> list:
         ).astype(np.int64)
         _check_grail_span(xi, "dictionary")
         out.append(SEG_ROWS * xi - xi.sum())
+    if len(out) < EMBED_DIM:
+        raise ValueError(
+            f"GRAIL dictionary has {len(out)} landmark segments, fewer "
+            f"than EMBED_DIM={EMBED_DIM}: only {len(out)} of the first "
+            f"GRAIL_DICT_K={GRAIL_DICT_K} signals have a complete "
+            f"{SEG_ROWS}-row segment"
+        )
     return out
 
 

@@ -6,12 +6,19 @@ Spark prunes natively:
 
 - partition column `event_date` (day of ts) → partition pruning for
   time-range queries (the SegmentKey.timestamp axis);
-- file-level signal clustering via repartition on (signal bucket) +
-  sortWithinPartitions(user_id, ts) → per-file min/max footer stats
+- file-level signal clustering via a hash repartition on user_id +
+  an in-file sort on (user_id, ts) → per-file min/max footer stats
   prune on signal id (the SegmentKey.signal axis) and rows arrive
-  presorted for per-signal windows;
+  presorted for per-signal windows. The repartition names no count:
+  AQE's partition coalescing sizes each ingest's write fan-out to the
+  batch (capped at spark.sql.shuffle.partitions), so a small batch
+  writes one file per touched day instead of a fixed bucket count;
 - Parquet encodings (dictionary / delta / byte-stream-split) + zstd do
   the Methods-enum job (§1.3) per column chunk, chosen by the writer.
+
+Reads declare the schema the writer recorded in the first file's
+footer (`read_parquet`), so opening the store starts no
+schema-inference job.
 
 At 100 TB: same layout, plus a target file size (maxRecordsPerFile or
 table-format compaction) and bucketed tables if the engine supports
@@ -21,10 +28,15 @@ joins co-locate without a shuffle.
 
 from __future__ import annotations
 
+import json
+import os
+
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-SIGNAL_BUCKETS = 16  # files per date partition ≈ cluster write parallelism
+SIGNAL_BUCKETS = 16  # cap on compact_partition's output files per date
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # compaction target file size
 
 
@@ -40,12 +52,17 @@ def _micros_timestamps(events: DataFrame) -> None:
 
 
 def write_signal_store(events: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Persist events as the time-partitioned, signal-clustered store."""
+    """Persist events as the time-partitioned, signal-clustered store.
+
+    The sort leads with event_date: the partitioned write requires
+    that ordering and would otherwise plan its own Sort(event_date)
+    on top, and the optimizer then drops the (user_id, ts) sort
+    beneath it, leaving the files unsorted."""
     _micros_timestamps(events)
     (
         events.withColumn("event_date", F.to_date("ts"))
-        .repartition(SIGNAL_BUCKETS, F.col("user_id"))
-        .sortWithinPartitions("user_id", "ts")
+        .repartition(F.col("user_id"))
+        .sortWithinPartitions("event_date", "user_id", "ts")
         .write.partitionBy("event_date")
         .option("compression", "zstd")
         .mode(mode)
@@ -53,9 +70,50 @@ def write_signal_store(events: DataFrame, path: str, mode: str = "overwrite") ->
     )
 
 
+# the key under which Spark's parquet writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The data schema Spark's writer recorded in the footer of the
+    first data file under `path` (sorted walk, skipping `_`/`.` names
+    as Spark's listing does), or None when there is no local file or
+    the file was not written by Spark."""
+    first = path if os.path.isfile(path) else None
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        data = sorted(f for f in files if not f.startswith(("_", ".")))
+        if data:
+            first = os.path.join(root, data[0])
+            break
+    if first is None:
+        return None
+    meta = pq.read_metadata(first).metadata or {}
+    if SPARK_SCHEMA_KEY not in meta:
+        return None
+    return StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """`spark.read.parquet(*paths)` without the schema-inference job:
+    the schema comes from the first file's footer (a local read well
+    under a millisecond) and is declared, so Spark only lists files.
+    Partition columns (event_date, batch_id) are still discovered from
+    the directory names. Falls back to plain inference when no footer
+    schema is found, or when the file vanished mid-read (a concurrent
+    compaction retiring it)."""
+    try:
+        schema = _footer_schema(paths[0])
+    except FileNotFoundError:
+        schema = None
+    if schema is None:
+        return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def read_signal_store(spark: SparkSession, path: str) -> DataFrame:
     """Scan the store; time/signal predicates prune partitions/files."""
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 ZORDER_BITS = 16    # per-dimension resolution of the z-curve
@@ -131,8 +189,9 @@ def compact_partition(spark: SparkSession, path: str, event_date: str) -> int:
     """Small-file compaction for one date partition — streaming ingest
     appends a file per micro-batch, and a 100 TB store lives or dies
     by file sizes (footer-stat pruning and scan throughput both
-    degrade with file count). Rewrites the partition to SIGNAL_BUCKETS
-    signal-clustered sorted files; returns the file count removed.
+    degrade with file count). Rewrites the partition to at most
+    SIGNAL_BUCKETS signal-clustered sorted files; returns the file
+    count removed.
 
     The rewrite stages to a sibling directory, then swaps by renaming
     the original to `.old` before renaming the staged copy in — a
@@ -156,7 +215,7 @@ def compact_partition(spark: SparkSession, path: str, event_date: str) -> int:
     n_files = max(1, min(SIGNAL_BUCKETS, -(-total_bytes // TARGET_FILE_BYTES)))
     staged = f"{part}.compacting"
     (
-        spark.read.parquet(part)
+        read_parquet(spark, part)
         .repartition(n_files, "user_id")
         .sortWithinPartitions("user_id", "ts")
         .write.option("compression", "zstd")
